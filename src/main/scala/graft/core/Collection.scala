@@ -1,12 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.embed.EmbeddingFunc
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{dot_const_f32, is_normalized, normalize_f32}
+import graft.ops.VectorIndex
 
 /**
  * A collection of documents — parity with reference collection.go:16-29,
@@ -28,6 +29,9 @@ import graft.functions.VectorFunctions.{dot_const_f32, is_normalized, normalize_
  *  - Filters are pushed to the parquet scan; the expensive dot product
  *    only runs on filter survivors (reference orders it the same way,
  *    collection.go:521 before :542).
+ *  - Small collections (n·d ≤ VectorIndex.LocalScanMaxFloats) with a
+ *    built index answer flat queries in-process from the index's
+ *    driver-local slab, as the reference always does — see [[buildIndex]].
  */
 class Collection private[core] (
     val name: String,
@@ -55,6 +59,7 @@ class Collection private[core] (
   private[core] def detachPersistence(): Unit = { persistRef = None }
 
   import spark.implicits._
+  import Collection.{DocumentEncoder, ResultEncoder}
 
   /** One immutable view of the collection: rows + count + the optional
     * indexes built OVER those rows, swapped together through a single
@@ -69,7 +74,7 @@ class Collection private[core] (
   private final class Snap(
       val df0: DataFrame,
       n0: => Long,
-      val flat: Option[graft.ops.VectorIndex[String]],
+      val flat: Option[VectorIndex[String]],
       val lsh: Option[graft.ops.LshIndex],
       val ivf: Option[graft.ops.IvfState]) {
     // plain class (not a case class: the synthetic inner-class equals
@@ -87,7 +92,7 @@ class Collection private[core] (
       * lost-file failure does not poison the snap for the retry. */
     lazy val n: Long = n0
     def copy(
-        flat: Option[graft.ops.VectorIndex[String]] = this.flat,
+        flat: Option[VectorIndex[String]] = this.flat,
         lsh: Option[graft.ops.LshIndex] = this.lsh,
         ivf: Option[graft.ops.IvfState] = this.ivf): Snap =
       new Snap(df0, n, flat, lsh, ivf)
@@ -181,7 +186,7 @@ class Collection private[core] (
     // still defined (map-assignment overwrite parity, collection.go:280)
     val lastWins = documents.zipWithIndex
       .groupBy(_._1.id).valuesIterator.map(_.maxBy(_._2)._1).toVector
-    val batch = spark.createDataset(lastWins).toDF()
+    val batch = spark.createDataset(lastWins)(DocumentEncoder).toDF()
       .repartition(math.min(concurrency, lastWins.size))
     addDF(batch)
   }
@@ -203,7 +208,7 @@ class Collection private[core] (
     // client + request batching per task, not a row-at-a-time UDF call
     // (the reference's worker-goroutine shape, collection.go:218-240,
     // mapped onto Spark tasks).
-    val embedded = conformed.as[Document].mapPartitions { it =>
+    val embedded = conformed.as(DocumentEncoder).mapPartitions { it =>
       it.grouped(256).flatMap { chunk => // bounded per-task buffering
         // id validation HERE, not just in addDocuments (reference
         // NewDocument, collection.go:257-259): addDF is the scale entry
@@ -227,7 +232,7 @@ class Collection private[core] (
             s"embedding function returned ${vecs.length} vectors for ${needVec.length} texts")
         haveVec ++ needVec.lazyZip(vecs).map((d, v) => d.copy(embedding = v))
       }
-    }.toDF()
+    }(DocumentEncoder).toDF()
       .withColumn("embedding",
         when(is_normalized(col("embedding")), col("embedding"))
           .otherwise(normalize_f32(col("embedding"))))
@@ -288,7 +293,7 @@ class Collection private[core] (
     if (id == null || id.isEmpty)
       throw new IllegalArgumentException("document ID is empty")
     readCommitted {
-      df.filter(col("id") === lit(id)).as[Document].collect().headOption
+      df.filter(col("id") === lit(id)).as(DocumentEncoder).collect().headOption
         .getOrElse(throw new NoSuchElementException(s"document with ID '$id' not found"))
     }
   }
@@ -379,20 +384,35 @@ class Collection private[core] (
 
   /**
    * Build (or rebuild) the packed FLAT index for this collection's
-   * embeddings. Unfiltered `queryEmbedding` calls then scan packed
-   * primitive float[] slabs (~2× faster than the columnar DataFrame scan;
-   * see ops.VectorIndex) and join survivors back by id — the reference's
-   * own materialize-by-id step (collection.go:547-556). Any mutation
-   * drops the index; call again to rebuild.
+   * embeddings (see ops.VectorIndex). Any mutation drops the index; call
+   * again to rebuild.
+   *
+   * When n·d ≤ VectorIndex.LocalScanMaxFloats the index lands on the
+   * driver as one contiguous slab, and the collect that brings the
+   * vectors there also brings each row's metadata and content. Every
+   * flat query — unfiltered, `where`/`whereDocument`-filtered and
+   * NEGATIVE_MODE_FILTER — is then answered in-process from that copy
+   * with no Spark job, as the reference answers all of them
+   * (collection.go:496-559). Above the threshold the index stays
+   * distributed: unfiltered queries scan its blocks and join the
+   * survivors back by id — the reference's own materialize-by-id step
+   * (collection.go:547-556) — and filtered ones take [[queryDF]].
+   * Ties order by id in code-point (= UTF-8 byte) order, as Spark's
+   * `asc("id")` does.
    */
   def buildIndex(numBlocks: Int = 0): Unit = synchronized {
     val s = snap
     if (s.n > 0) {
+      val dim = embeddingDim(s.df0)
+      // s.n counts every row, so s.n·d bounds the embedded rows' n·d: the
+      // payload is captured exactly when materialize() will go local
+      val payload =
+        if (s.n * dim <= VectorIndex.LocalScanMaxFloats) Seq("metadata", "content") else Nil
       // explicit type: the this.type chain otherwise infers an
       // inexpressible existential (a -feature warning)
-      val built: graft.ops.VectorIndex[String] = graft.ops.VectorIndex
+      val built: VectorIndex[String] = VectorIndex
         .build[String](s.df0.filter(col("embedding").isNotNull), "id", "embedding",
-          embeddingDim(s.df0), numBlocks)
+          dim, numBlocks, payload)(scala.reflect.classTag[String], VectorIndex.CodePointOrdering)
         .persist().materialize()
       snap = s.copy(flat = Some(built))
       // release the DISPLACED index's persisted blocks after the swap
@@ -475,7 +495,7 @@ class Collection private[core] (
         .orElse(s.ivf.map(_.topK(queryEmbedding, nResults, nprobe)))
       probe match {
         case Some(p) =>
-          val rows = p.as[QueryResult].collect().toIndexedSeq
+          val rows = p.as(ResultEncoder).collect().toIndexedSeq
           if (rows.length < nResults) this.queryEmbedding(queryEmbedding, nResults)
           else rows
         case None => this.queryEmbedding(queryEmbedding, nResults)
@@ -665,7 +685,7 @@ class Collection private[core] (
     val scores = top.toMap
     val order = top.map(_._1).zipWithIndex.toMap
     base.filter(col("id").isInCollection(top.map(_._1)))
-      .as[Document].collect()
+      .as(DocumentEncoder).collect()
       .map(d => QueryResult(d.id, d.metadata, d.embedding, d.content,
         scores(d.id).toFloat))
       .sortBy(r => order(r.id)).toIndexedSeq
@@ -691,31 +711,67 @@ class Collection private[core] (
       throw new IllegalArgumentException(
         "nResults must be <= the number of documents in the collection")
     Filters.validateWhereDocument(whereDocument, "unsupported operator")
-    // Index path: exhaustive packed scan when no filters narrow the scan
-    // set (filters would have pruned BEFORE scoring, collection.go:521).
-    // ONE snap read: the index and the join-back rows come from the same
-    // committed view — reading them through separate volatiles let a
-    // concurrent commit pair an old index with the new state.
+    // ONE snap read: the index and the rows it answers from (its own
+    // payload, or the join-back state) come from the same committed
+    // view — reading them through separate volatiles let a concurrent
+    // commit pair an old index with the new state.
     readCommitted {
       val s = snap
-      s.flat match {
+      val local = s.flat.map(_.localBlock).orNull
+      if (local != null && local.payload != null)
+        queryLocal(s.flat.get, local, qv, nResults, where, whereDocument, negVector, negThreshold)
+      else s.flat match {
+        // distributed index: exhaustive packed scan when no filters narrow
+        // the scan set (filters would have pruned BEFORE scoring,
+        // collection.go:521)
         case Some(idx) if where.isEmpty && whereDocument.isEmpty && negVector == null =>
           val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
-          val top = idx.topK(q, nResults).sortBy { case (id, s) => (-s, id) }
+          val top = idx.topK(q, nResults) // already (score desc, id asc)
           if (top.isEmpty) IndexedSeq.empty
           else {
             val scores = top.toMap
             val order = top.map(_._1).zipWithIndex.toMap
             // join-back materialization by id (reference collection.go:547-556)
             s.df0.filter(col("id").isInCollection(top.map(_._1).toIndexedSeq))
-              .as[Document].collect()
+              .as(DocumentEncoder).collect()
               .map(d => QueryResult(d.id, d.metadata, d.embedding, d.content, scores(d.id)))
               .sortBy(r => order(r.id)).toIndexedSeq
           }
         case _ =>
           queryDF(qv, nResults, where, whereDocument, negVector, negThreshold)
-            .as[QueryResult].collect().toIndexedSeq
+            .as(ResultEncoder).collect().toIndexedSeq
       }
+    }
+  }
+
+  /** [[queryDF]]'s answer computed in-process from the index's
+    * driver-local slab `b` and its (metadata, content) payload: the same
+    * filters (per-row, [[Filters.rowMatcher]]), the same negative filter
+    * and the same float fold, ranked (score desc, id asc) — no Spark job.
+    * Each embedding is a copy, so a caller cannot write into the index. */
+  private def queryLocal(
+      idx: VectorIndex[String],
+      b: VectorIndex.Block[String],
+      qv: Array[Float],
+      nResults: Int,
+      where: Map[String, String],
+      whereDocument: Map[String, String],
+      negVector: Array[Float],
+      negThreshold: Float): Seq[QueryResult] = {
+    val q = if (VectorFunctions.isNormalized(qv)) qv else VectorFunctions.normalize(qv)
+    def metadata(r: Int): Map[String, String] = b.payload(r).getAs[Map[String, String]](0)
+    def content(r: Int): String = b.payload(r).getString(1)
+    val keep: Int => Boolean =
+      if (where.isEmpty && whereDocument.isEmpty) null
+      else {
+        val matches = Filters.rowMatcher(where, whereDocument)
+        r => matches(metadata(r), content(r))
+      }
+    val d = idx.dim
+    idx.scanLocal(b, q, nResults, keep, negVector, negThreshold).toIndexedSeq.map {
+      case (r, sim) =>
+        QueryResult(b.ids(r), metadata(r),
+          java.util.Arrays.copyOfRange(b.data, r * d, (r + 1) * d), content(r), sim)
     }
   }
 
@@ -741,7 +797,7 @@ class Collection private[core] (
         .withColumn("similarity", dot_const_f32(col("embedding"), q))
         .orderBy(desc("similarity"), asc("id"))
         .limit(nResults)
-        .as[QueryResult].collect().toIndexedSeq
+        .as(ResultEncoder).collect().toIndexedSeq
     }
   }
 
@@ -799,6 +855,13 @@ class Collection private[core] (
     old.lsh.foreach(_.unpersist())
     old.ivf.foreach(_.unpersist())
   }
+}
+
+object Collection {
+  // Encoders.product derives through Scala reflection on every call; the
+  // paths that stay on Spark reuse one of each.
+  private val DocumentEncoder: Encoder[Document] = Encoders.product[Document]
+  private val ResultEncoder: Encoder[QueryResult] = Encoders.product[QueryResult]
 }
 
 /** Where/how a collection's rows live on disk (parquet + metadata sidecar). */

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
- * where / whereDocument → Catalyst predicate.
+ * where / whereDocument → Catalyst predicate, and its per-row twin for
+ * driver-local scans ([[Filters.rowMatcher]]).
  *
  * Semantics pinned to the reference:
  *  - `where`: metadata equality on every entry, implicit AND
@@ -32,26 +33,14 @@ object Filters {
     }
 
   def metadataPredicate(where: Map[String, String]): Column = {
-    // reject null keys/values up front: lit(null) nulls the whole
-    // AND-fold and the filter silently returns ZERO rows — in the Go
-    // reference this state is unrepresentable (map[string]string cannot
-    // hold nil), so loud rejection is the faithful port of "cannot
-    // happen", not a behavior change
-    where.foreach { case (k, v) =>
-      if (k == null || v == null) throw new IllegalArgumentException(
-        "where keys and values must be non-null")
-    }
+    checkWhere(where)
     where.foldLeft(lit(true)) { case (acc, (k, v)) =>
       acc && (coalesce(element_at(col("metadata"), lit(k)), lit("")) === lit(v))
     }
   }
 
   def contentPredicate(whereDocument: Map[String, String]): Column = {
-    validateWhereDocument(whereDocument)
-    whereDocument.foreach { case (_, v) =>
-      if (v == null) throw new IllegalArgumentException(
-        "whereDocument values must be non-null")
-    }
+    checkWhereDocument(whereDocument)
     whereDocument.foldLeft(lit(true)) {
       case (acc, (ContainsOp, v))    => acc && coalesce(col("content"), lit("")).contains(v)
       case (acc, (NotContainsOp, v)) => acc && !coalesce(col("content"), lit("")).contains(v)
@@ -61,6 +50,46 @@ object Filters {
 
   def predicate(where: Map[String, String], whereDocument: Map[String, String]): Column =
     metadataPredicate(where) && contentPredicate(whereDocument)
+
+  /** Per-row twin of [[predicate]] for driver-local scans: the same
+    * validation and errors, the same semantics on (metadata, content) —
+    * a missing key or null value reads as "", null metadata reads as no
+    * keys, null content reads as "", contains is case-sensitive. */
+  def rowMatcher(
+      where: Map[String, String],
+      whereDocument: Map[String, String]): (Map[String, String], String) => Boolean = {
+    checkWhere(where)
+    checkWhereDocument(whereDocument)
+    val eq = where.toArray
+    val contains = whereDocument.get(ContainsOp)
+    val notContains = whereDocument.get(NotContainsOp)
+    (metadata, content) => {
+      val c = if (content == null) "" else content
+      eq.forall { case (k, v) =>
+        val m = if (metadata == null) null else metadata.getOrElse(k, null)
+        (if (m == null) "" else m) == v
+      } && contains.forall(c.contains) && !notContains.exists(c.contains)
+    }
+  }
+
+  // reject null keys/values up front: lit(null) nulls the whole
+  // AND-fold and the filter silently returns ZERO rows — in the Go
+  // reference this state is unrepresentable (map[string]string cannot
+  // hold nil), so loud rejection is the faithful port of "cannot
+  // happen", not a behavior change
+  private def checkWhere(where: Map[String, String]): Unit =
+    where.foreach { case (k, v) =>
+      if (k == null || v == null) throw new IllegalArgumentException(
+        "where keys and values must be non-null")
+    }
+
+  private def checkWhereDocument(whereDocument: Map[String, String]): Unit = {
+    validateWhereDocument(whereDocument)
+    whereDocument.foreach { case (_, v) =>
+      if (v == null) throw new IllegalArgumentException(
+        "whereDocument values must be non-null")
+    }
+  }
 
   // ------------------------------------------------------------------
   // $and / $or combinators — the reference's roadmap extension

@@ -194,7 +194,7 @@ final class ColumnStatsBuffer(maxEntries: Int) {
   }
 
   def toBytes: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(42 + size * 8)
+    val bb = java.nio.ByteBuffer.allocate(ColumnStatsBuffer.HeaderBytes + size * 8)
     bb.putLong(n); bb.putLong(nNull)
     bb.put(if (hasVal) 1.toByte else 0.toByte)
     bb.putDouble(mn); bb.putDouble(mx)
@@ -210,6 +210,9 @@ final class ColumnStatsBuffer(maxEntries: Int) {
 }
 
 object ColumnStatsBuffer {
+  /** n, nNull (8 + 8), hasVal (1), mn, mx (8 + 8), hasZero (1), size (4). */
+  private[functions] val HeaderBytes = 38
+
   def fromBytes(bytes: Array[Byte], maxEntries: Int): ColumnStatsBuffer = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val buf = new ColumnStatsBuffer(maxEntries)

@@ -57,9 +57,7 @@ class Int8VectorIndex[K: ClassTag: Ordering] private (
     val perPart = blocks.mapPartitions { it =>
       Int8VectorIndex.scanTopK(it, d, qb, qs, k)(tieOrd).iterator
     }
-    perPart.collect()
-      .sorted(Ordering.by[(K, Double), Double](-_._2).orElseBy(_._1)(ord))
-      .take(k)
+    VectorIndex.topOf(perPart.collect(), k, ord)
   }
 
   /** Driver-local scan fanned out on the shared [[VectorIndex]] pool in
@@ -81,9 +79,7 @@ class Int8VectorIndex[K: ClassTag: Ordering] private (
           Int8VectorIndex.scanRange(block, from, until, d, qb, qs, k)(ord)
       })
     }
-    tasks.flatMap(_.get())
-      .sorted(Ordering.by[(K, Double), Double](-_._2).orElseBy(_._1)(ord))
-      .take(k)
+    VectorIndex.topOf(tasks.flatMap(_.get()), k, ord)
   }
 
   /** Count of indexed vectors. */
@@ -128,43 +124,18 @@ object Int8VectorIndex {
     * rationale as [[VectorIndex.ChunkFloats]]. */
   private[graft] val ChunkBytes: Int = 64 * 1024 * 1024
 
-  /** The ONE scan kernel — a bounded (score desc, id asc) heap over a
-    * row RANGE of a block — used by both the distributed per-partition
-    * pass ([[scanTopK]], whole blocks) and the driver-local pooled path
-    * (4096-row chunks), so the two can never diverge. The int
+  /** The ONE scan kernel — a row RANGE of a block into the shared
+    * [[VectorIndex.TopKHeap]] — used by both the distributed
+    * per-partition pass ([[scanTopK]], whole blocks) and the driver-local
+    * pooled path (4096-row chunks), so the two can never diverge. The int
     * accumulator is exact: |Σ qaᵢ·qbᵢ| ≤ 127²·d < 2³¹ for every
     * supported d (build rejects d > 100000). */
   private[ops] def scanRange[K](
       block: Block[K], from: Int, until: Int, d: Int,
       qb: Array[Byte], qs: Double,
       k: Int)(ord: Ordering[K]): Array[(K, Double)] = {
-    val ids = new Array[Any](k)
-    val scores = new Array[Double](k)
-    var size = 0
-    var minIdx = -1
-    def establishMin(): Unit = {
-      minIdx = 0
-      var j = 1
-      while (j < k) {
-        if (scores(j) < scores(minIdx) ||
-          (scores(j) == scores(minIdx) &&
-            ord.compare(ids(j).asInstanceOf[K], ids(minIdx).asInstanceOf[K]) > 0))
-          minIdx = j
-        j += 1
-      }
-    }
-    def insert(id: Any, s: Double): Unit = {
-      if (size < k) {
-        ids(size) = id; scores(size) = s; size += 1
-        if (size == k) establishMin()
-      } else if (s > scores(minIdx) || (s == scores(minIdx) &&
-          ord.compare(id.asInstanceOf[K], ids(minIdx).asInstanceOf[K]) < 0)) {
-        ids(minIdx) = id; scores(minIdx) = s
-        establishMin()
-      }
-    }
+    val heap = new VectorIndex.TopKHeap[K](math.min(k, until - from), block.ids, ord)
     val data = block.data
-    val bids = block.ids
     val bscales = block.scales
     var r = from
     while (r < until) {
@@ -174,12 +145,10 @@ object Int8VectorIndex {
       while (i < d) { dot += data(off + i) * qb(i); i += 1 }
       // same double product, same order, as quantizedTopK's
       // (qdot.cast(double) * qscale) * qs — bit-equal scores
-      insert(bids(r), dot.toDouble * bscales(r) * qs)
+      heap.offer(r, dot.toDouble * bscales(r) * qs)
       r += 1
     }
-    Array.tabulate(size)(j => (ids(j).asInstanceOf[K], scores(j)))
-      .sorted(Ordering.by[(K, Double), Double](-_._2).orElseBy(_._1)(ord))
-      .take(k)
+    heap.entries.map { case (row, s) => (block.ids(row), s) }
   }
 
   /** Per-partition pass: [[scanRange]] over each whole block, merged
@@ -187,10 +156,8 @@ object Int8VectorIndex {
   private def scanTopK[K](
       it: Iterator[Block[K]], d: Int, qb: Array[Byte], qs: Double,
       k: Int)(ord: Ordering[K]): Array[(K, Double)] =
-    it.flatMap(b => scanRange(b, 0, b.ids.length, d, qb, qs, k)(ord))
-      .toArray
-      .sorted(Ordering.by[(K, Double), Double](-_._2).orElseBy(_._1)(ord))
-      .take(k)
+    VectorIndex.topOf(
+      it.flatMap(b => scanRange(b, 0, b.ids.length, d, qb, qs, k)(ord)).toArray, k, ord)
 
   /** Build from a PRE-QUANTIZED frame's (id, qvec, qscale) columns —
     * the output of [[Quantize.quantize]], so this layout and the

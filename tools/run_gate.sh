@@ -4,7 +4,7 @@
 # catches scale-surfaced oracle divergences the sf0.01 gate can't):
 #   compile + tests + Verify@sf0.01 + DuckDB compare
 #   + Verify@sf0.1 + DuckDB compare (strict, timeouts fail)
-#   + Bench@sf0.1
+#   + perfbench --selfcheck + Bench@sf0.1
 # Usage: tools/run_gate.sh [--no-bench] [--no-sf01] [--no-invar]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -106,6 +106,14 @@ if [[ "$RUN_SF01" == 1 ]]; then
 fi
 
 if [[ "$RUN_BENCH" == 1 ]]; then
+  echo "== perfbench self-check (both workloads at toy scale) =="
+  # compiles the benchmark harness against this tree and runs every
+  # workload traced and untraced: an index/collection API change that
+  # breaks the harness fails here, not on the next benchmark run
+  python3 perfbench/run.py --selfcheck > /tmp/gate_perfbench.log 2>&1 \
+    || { tail -30 /tmp/gate_perfbench.log; echo "perfbench self-check FAILED"; exit 1; }
+  tail -3 /tmp/gate_perfbench.log
+
   echo "== Bench @ sf0.1 =="
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
